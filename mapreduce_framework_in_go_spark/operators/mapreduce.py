@@ -173,16 +173,29 @@ def mr_run(
     ``map_fn(doc, contents) -> iterable[(key, value)]`` is the UDTF shape,
     ``reduce_fn(key, values) -> value`` the UDAF shape — the reference's
     only extension points (``mr/worker.go:38``, ``main/mrsequential.go:
-    93-110``). Values arrive at ``reduce_fn`` sorted (matching the
-    sequential oracle, which reduces over a globally sorted buffer,
-    ``main/mrsequential.go:59-77``) so any order-sensitive reduce is
-    deterministic under Spark task retries.
+    93-110``). Values arrive at ``reduce_fn`` sorted, and each key is
+    reduced exactly once, so any order-sensitive reduce is deterministic
+    under Spark task retries.
 
-    Execution: Arrow-batched ``mapInPandas`` for the flatMap (one Python
-    crossing per batch, not per row), built-in hash exchange on ``key``,
-    ``applyInPandas`` per group for the reduce. At scale the exchange is
-    the only shuffle; there is no driver materialization.
+    Execution is the sequential oracle's sort-then-stream shape
+    (``main/mrsequential.go:59-77``: sort the intermediate buffer, then
+    call Reduce once per run of equal keys), distributed:
+
+    - Arrow-batched ``mapInPandas`` for the flatMap (one Python crossing
+      per batch, not per row);
+    - one hash exchange on ``key`` (``repartition``), then
+      ``sortWithinPartitions(key, value)``. Spark's UTF8_BINARY order is
+      code-point order, i.e. Python's ``sorted`` order, so no Python sort;
+    - a second ``mapInPandas`` that walks each sorted batch once and calls
+      ``reduce_fn`` per run of equal keys, carrying the open run across
+      batch boundaries and flushing it at the end of the partition.
+
+    No pandas frame is built per key. At scale the exchange is the only
+    shuffle, and nothing is collected.
     """
+    from itertools import groupby
+    from operator import itemgetter
+
     import pandas as pd
 
     def flat_map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -199,13 +212,34 @@ def mr_run(
         F.col(doc_col).cast("string").alias(doc_col), F.col(content_col)
     ).mapInPandas(flat_map, schema="key string, value string")
 
-    def reduce_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        key = pdf["key"].iloc[0]
-        values = sorted(pdf["value"].tolist())
-        return pd.DataFrame({"key": [key], "value": [reduce_fn(key, values)]})
+    # "no open run yet": None is a legal key, so a private sentinel
+    no_run = object()
 
-    return pairs.groupBy("key").applyInPandas(
-        reduce_group, schema="key string, value string"
+    def reduce_sorted(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        open_key, open_values = no_run, []
+        for pdf in batches:
+            keys: list[str] = []
+            vals: list[str] = []
+            rows = zip(pdf["key"].tolist(), pdf["value"].tolist())
+            for key, run in groupby(rows, key=itemgetter(0)):
+                run_values = [v for _, v in run]
+                if key == open_key:  # the run continues from the last batch
+                    open_values.extend(run_values)
+                    continue
+                if open_key is not no_run:
+                    keys.append(open_key)
+                    vals.append(reduce_fn(open_key, open_values))
+                open_key, open_values = key, run_values
+            yield pd.DataFrame({"key": keys, "value": vals})
+        if open_key is not no_run:
+            yield pd.DataFrame(
+                {"key": [open_key], "value": [reduce_fn(open_key, open_values)]}
+            )
+
+    return (
+        pairs.repartition("key")
+        .sortWithinPartitions("key", "value")
+        .mapInPandas(reduce_sorted, schema="key string, value string")
     )
 
 

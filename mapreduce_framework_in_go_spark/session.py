@@ -55,6 +55,14 @@ def get_spark(
             builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    # Every glob read (sources.tables.scan_text_corpus) makes FileStreamSink
+    # probe for a streaming-sink metadata dir and log the expected miss as
+    # a WARN with a full FileNotFoundException trace; mute that one logger.
+    jvm = spark.sparkContext._jvm
+    jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
+        "org.apache.spark.sql.execution.streaming.sinks.FileStreamSink",
+        jvm.org.apache.logging.log4j.Level.ERROR,
+    )
     # make package-referencing UDFs importable on executor workers even
     # when this process's cwd is not the repo (see pyship.py)
     from .pyship import ensure_package_shipped

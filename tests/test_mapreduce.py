@@ -2,6 +2,8 @@
 technique, main/test-mr.sh:59-67), mr_run round-trip, and rerun
 determinism (the crash test's invariant, main/test-mr.sh:194-203)."""
 
+import os
+
 from pyspark.sql import functions as F
 
 from mapreduce_framework_in_go_spark.operators import mapreduce as mr
@@ -52,34 +54,139 @@ def test_rerun_determinism(spark, sf_dir):
     assert run() == run()
 
 
-def test_task_retry_tolerance(spark, sf_dir):
+def test_task_retry_tolerance(spark, sf_dir, tmp_path):
     """The crash app's real assertion: task failure + re-execution still
     yields oracle-identical output. Inject one task failure via a mapInPandas
     batch that throws on first attempt, rely on spark.task.maxFailures."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    marker = str(tmp_path / "flaky_fired")
 
     def flaky(batches):
-        import os
-        import tempfile
-
-        marker = os.path.join(tempfile.gettempdir(), "mr_flaky_marker")
         for pdf in batches:
             if not os.path.exists(marker):
                 open(marker, "w").close()
                 raise RuntimeError("injected task failure (crash.go analogue)")
             yield pdf
 
-    try:
-        out = docs.mapInPandas(flaky, schema=docs.schema)
-        n = out.count()
-        assert n == docs.count()
-    finally:
-        import os
-        import tempfile
+    out = docs.mapInPandas(flaky, schema=docs.schema)
+    assert out.count() == docs.count()
+    assert os.path.exists(marker), "failure never injected — test is vacuous"
 
-        m = os.path.join(tempfile.gettempdir(), "mr_flaky_marker")
-        if os.path.exists(m):
-            os.remove(m)
+
+def _posting_map(doc, contents):
+    for tok in contents.split():
+        yield tok, doc
+
+
+def _posting_reduce(key, values):
+    # order-sensitive: a reduce that saw unsorted or split values differs
+    return f"{len(values)}:{','.join(values)}"
+
+
+def test_mr_run_reduce_retry_identical(spark, sf_dir, tmp_path):
+    """The crash test's invariant (main/test-mr.sh:194-203) on the
+    streaming reduce: a Reduce that dies on the first attempt of
+    partition 0 is retried (local[N,2]) and the job's output equals a
+    clean run row for row, each key reduced exactly once."""
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    marker = str(tmp_path / "reduce_crash_fired")
+
+    def crashing_reduce(key, values):
+        from pyspark import TaskContext
+
+        tc = TaskContext.get()
+        if tc.partitionId() == 0 and tc.attemptNumber() == 0:
+            open(marker, "w").close()
+            raise RuntimeError("injected reduce failure (crash.go analogue)")
+        return _posting_reduce(key, values)
+
+    clean = sorted(
+        tuple(r) for r in mr.mr_run(docs, _posting_map, _posting_reduce).collect()
+    )
+    retried = sorted(
+        tuple(r) for r in mr.mr_run(docs, _posting_map, crashing_reduce).collect()
+    )
+    assert os.path.exists(marker), "reduce failure never injected — test is vacuous"
+    assert retried == clean
+    keys = [k for k, _ in retried]
+    assert len(keys) == len(set(keys)), "a key was reduced twice"
+
+
+def test_mr_run_group_boundaries_and_order(spark):
+    """Sort-then-stream edge cases: a hot key whose values span many
+    7-row Arrow batches, a None key, a None-content doc, empty shuffle
+    partitions, and values whose code-point order differs from UTF-16
+    order (U+FF5A vs the astral U+1D518). Every key is reduced once,
+    over exactly its values, in Python ``sorted`` order."""
+    import json
+
+    contents = ["z é a", "ｚ 𝔘 é", None, "𝔘 Z z ｚ", "a e", "", "é é"]
+    docs = spark.createDataFrame(
+        [(f"d{i}", c) for i, c in enumerate(contents)],
+        schema="doc string, content string",
+    )
+
+    def map_fn(doc, text):
+        i = int(doc[1:])
+        for j in range(i, 50, len(contents)):  # 50 hot values, unsorted
+            yield "hot", f"{(j * 37) % 50:02d}"
+        yield None, doc
+        for tok in text.split():
+            yield tok, doc
+
+    def reduce_fn(key, values):
+        assert values == sorted(values), (key, values)
+        return json.dumps(values)
+
+    expected: dict = {}
+    for i, c in enumerate(contents):
+        for k, v in map_fn(f"d{i}", c or ""):
+            expected.setdefault(k, []).append(v)
+    assert len(expected["hot"]) == 50
+
+    conf = {
+        "spark.sql.execution.arrow.maxRecordsPerBatch": "7",
+        "spark.sql.shuffle.partitions": str(4 * len(expected)),
+        "spark.sql.adaptive.coalescePartitions.enabled": "false",
+    }
+    old = {k: spark.conf.get(k) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        rows = mr.mr_run(docs, map_fn, reduce_fn, doc_col="doc",
+                         content_col="content").collect()
+    finally:
+        for k, v in old.items():
+            spark.conf.set(k, v)
+
+    keys = [r["key"] for r in rows]
+    assert len(keys) == len(set(keys)), "a key was reduced twice"
+    got = {r["key"]: json.loads(r["value"]) for r in rows}
+    assert got == {k: sorted(v) for k, v in expected.items()}
+
+
+def test_mr_run_plan_is_sort_then_stream(spark, sf_dir):
+    """mr_run's reduce is one exchange, a (key, value) sort and a
+    streaming mapInPandas — never the per-group FlatMapGroupsInPandas."""
+    import re
+
+    from mapreduce_framework_in_go_spark.plans.inspect import formatted_plan
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    plan = formatted_plan(mr.mr_run(docs, mr.wc_map, mr.wc_reduce))
+    assert "FlatMapGroupsInPandas" not in plan, plan
+    assert len(re.findall(r"hashpartitioning\(key#\d+", plan)) == 1, plan
+
+    tree = plan.split("\n\n")[0]
+    nodes = re.findall(r"(\w+) \((\d+)\)", tree)
+    names = [name for name, _ in nodes]
+    top = names.index("MapInPandas")
+    assert names[top : top + 4] == ["MapInPandas", "Sort", "Exchange", "MapInPandas"], tree
+    sort_id = nodes[top + 1][1]
+    sort_args = re.search(
+        rf"\({sort_id}\) Sort.*?\nArguments: (.*)\n", plan, re.S
+    ).group(1)
+    assert re.match(r"\[key#\d+ ASC NULLS FIRST, value#\d+ ASC NULLS FIRST\]", sort_args), sort_args
 
 
 def test_parallelism_probe(spark):
